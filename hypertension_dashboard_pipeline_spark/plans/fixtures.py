@@ -176,12 +176,27 @@ EXPECTED_COHORT = {
 }
 
 
-def build_tables(spark: SparkSession) -> dict:
-    return {
-        "person": spark.createDataFrame(PERSON_ROWS, S.PERSON),
-        "measurement": spark.createDataFrame(MEASUREMENT_ROWS, S.MEASUREMENT),
-        "condition": spark.createDataFrame(CONDITION_ROWS, S.CONDITION_OCCURRENCE),
-        "observation": spark.createDataFrame(OBSERVATION_ROWS, S.OBSERVATION),
-        "procedure": spark.createDataFrame(PROCEDURE_ROWS, S.PROCEDURE_OCCURRENCE),
-        "drug_exposure": spark.createDataFrame(DRUG_ROWS, S.DRUG_EXPOSURE),
-    }
+# the input tables by the names run_pipeline expects
+ROWS = {
+    "person": PERSON_ROWS,
+    "measurement": MEASUREMENT_ROWS,
+    "condition": CONDITION_ROWS,
+    "observation": OBSERVATION_ROWS,
+    "procedure": PROCEDURE_ROWS,
+    "drug_exposure": DRUG_ROWS,
+}
+SCHEMAS = {
+    "person": S.PERSON,
+    "measurement": S.MEASUREMENT,
+    "condition": S.CONDITION_OCCURRENCE,
+    "observation": S.OBSERVATION,
+    "procedure": S.PROCEDURE_OCCURRENCE,
+    "drug_exposure": S.DRUG_EXPOSURE,
+}
+
+
+def build_tables(spark: SparkSession, rows: dict = ROWS) -> dict:
+    """The pipeline's input tables from row tuples (default: the
+    golden-patient fixtures)."""
+    return {name: spark.createDataFrame(r, SCHEMAS[name])
+            for name, r in rows.items()}

@@ -5122,9 +5122,12 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("mn").alias("s"))
         .first()["s"]
     )
+    # no order carries >= 2 parts: the graph is empty, BFS starts from
+    # no node and every level (and the unreached bucket) counts nothing
     dist = (
-        edges.sparkSession.range(1)
-        .select(F.lit(int(seed)).alias("node"), F.lit(0).alias("d"))
+        edges.sparkSession.range(0 if seed is None else 1)
+        .select(F.lit(0 if seed is None else int(seed)).alias("node"),
+                F.lit(0).alias("d"))
     )
     for _ in range(3):
         expanded = (

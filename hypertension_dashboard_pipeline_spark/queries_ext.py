@@ -1295,7 +1295,11 @@ def a14_sketch_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag")
         .agg(F.count(F.lit(1)).alias("__ed"))
     )
-    g = sketches.join(exact_distinct, "l_returnflag")
+    # left join + coalesce: a group whose partkeys are all NULL has no
+    # exact_distinct row; countDistinct would give it 0, so must this
+    g = sketches.join(exact_distinct, "l_returnflag", "left").withColumn(
+        "__ed", F.coalesce(F.col("__ed"), F.lit(0))
+    )
     return g.select(
         "l_returnflag",
         (F.abs(F.col("__ad") - F.col("__ed"))

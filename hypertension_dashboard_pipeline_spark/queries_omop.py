@@ -24,6 +24,7 @@ import datetime as dt
 import shutil
 import tempfile
 import weakref
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -75,41 +76,45 @@ def _readings_cte(name: str, concepts, lo: int, hi: int, out: str) -> str:
     )"""
 
 
-def _omop_pipeline_ctes() -> str:
+def _omop_pipeline_ctes(rows: Mapping[str, list[tuple]] = fx.ROWS) -> str:
     """The full scripts-2→4 pipeline as a WITH chain ending in a
-    ``phenotype`` CTE (one row per eligible patient, all flags)."""
+    ``phenotype`` CTE (one row per eligible patient, all flags).
+
+    ``rows`` maps each table name of ``fixtures.build_tables`` to its
+    row tuples (the fixture schemas' column order); the default is the
+    golden-patient fixture set.  Every table needs at least one row."""
     cl = fx.CODELISTS
     person = _values_cte(
         "person",
         ["PATIENT_LINKAGE", "YEAR_OF_BIRTH", "ETHNICITY_SOURCE_VALUE",
          "GENDER_SOURCE_VALUE", "LOCATION_ZIP", "LOCATION_STATE"],
-        fx.PERSON_ROWS, [0, 1, 2, 3, 5, 6],
+        rows["person"], [0, 1, 2, 3, 5, 6],
     )
     measurement = _values_cte(
         "measurement",
         ["PATIENT_LINKAGE", "MEASUREMENT_DATE", "MEASUREMENT_CONCEPT_ID",
          "VALUE_AS_NUMBER", "UNIT_CONCEPT_ID"],
-        fx.MEASUREMENT_ROWS, [0, 1, 2, 4, 5],
+        rows["measurement"], [0, 1, 2, 4, 5],
     )
     condition = _values_cte(
         "condition",
         ["PATIENT_LINKAGE", "CONDITION_CONCEPT_ID", "CONDITION_START_DATE"],
-        fx.CONDITION_ROWS, [0, 1, 3],
+        rows["condition"], [0, 1, 3],
     )
     observation = _values_cte(
         "observation",
         ["PATIENT_LINKAGE", "OBSERVATION_CONCEPT_ID", "OBSERVATION_DATE"],
-        fx.OBSERVATION_ROWS, [0, 1, 2],
+        rows["observation"], [0, 1, 2],
     )
     procedure = _values_cte(
         "procedure_t",
         ["PATIENT_LINKAGE", "PROCEDURE_CONCEPT_ID", "PROCEDURE_DATE"],
-        fx.PROCEDURE_ROWS, [0, 1, 2],
+        rows["procedure"], [0, 1, 2],
     )
     drug = _values_cte(
         "drug",
         ["PATIENT_LINKAGE", "DRUG_CONCEPT_ID", "DRUG_EXPOSURE_START_DATE"],
-        fx.DRUG_ROWS, [0, 1, 2],
+        rows["drug_exposure"], [0, 1, 2],
     )
 
     def domain(table: str, concept_col: str, date_col: str, codes,

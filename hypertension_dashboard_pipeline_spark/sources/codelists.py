@@ -5,8 +5,10 @@ The reference loads these from Excel workbooks and splices them into
 SQL text as IN-literals (2_data_importing_cleaning.R:204-269,
 4_hypertension_phenotype_main.R:48-54). Here they are plain data — CSV/
 Parquet files or Python sequences — consumed by
-``operators.filters.codelist_filter``, which picks IN-literal vs
-broadcast-semi-join by size.
+``operators.filters.codelist_predicate`` (one parsed ``IN`` expression
+that Catalyst plans as an ``InSet`` hash probe at the scan, whatever
+the list length); codelists kept as DataFrames go through
+``operators.filters.codelist_filter``'s broadcast semi-join.
 
 Only the blood-pressure measurement concepts and the mmHg unit are
 fixed OMOP constants (3_blood_pressure.R:98,102,121,125); the
@@ -63,9 +65,9 @@ def load_codelists_xlsx(paths: Mapping[str, str]) -> dict[str, list[int]]:
     takes the first column of concept IDs).
 
     Pure driver-side work over tiny files — the cluster only ever sees
-    the resulting int lists (IN-literal or broadcast semi-join via
-    ``operators.filters.codelist_filter``), so there is no distributed
-    xlsx parsing to worry about at 100 TB.
+    the resulting int lists (an ``InSet`` predicate via
+    ``operators.filters.codelist_predicate``), so there is no
+    distributed xlsx parsing to worry about at 100 TB.
     """
     from .xlsx import read_xlsx_rows
 

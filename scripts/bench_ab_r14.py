@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Per-query A/B timing harness for the r14 optimization round.
 
-Usage: python scripts/bench_ab_r14.py <query> [<query> ...] [--n N]
+Usage: python scripts/bench_ab_r14.py <query> [<query> ...] [--n N | --n=N]
 
 Same timer contract as bench.py (constructor + noop sink, warm-up then
 best-of-N, cache cleared between runs), but per-query so an isolated
@@ -12,6 +12,7 @@ and construct.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -35,11 +36,13 @@ def run_once(spark, name: str) -> tuple[float, float]:
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    n = 5
-    for a in sys.argv[1:]:
-        if a.startswith("--n"):
-            n = int(a.split("=", 1)[1]) if "=" in a else n
+    parser = argparse.ArgumentParser(
+        description="Per-query A/B timing: warm-up, then N timed runs.")
+    parser.add_argument("queries", nargs="+", metavar="query")
+    parser.add_argument("--n", type=int, default=5,
+                        help="timed runs per query (--n N or --n=N)")
+    opts = parser.parse_intermixed_args()
+    args, n = opts.queries, opts.n
     registry.load_all()
     spark = build_session(app_name="ab_r14", shuffle_partitions=cpu_count())
     spark.sparkContext.setLogLevel("ERROR")
